@@ -29,11 +29,16 @@ Design constraints that make it cheap:
   never removes them.
 - Double hashing (Kirsch-Mitzenmacher): bit_i = (h1 + i*h2) mod m with
   h1/h2 from one blake2b digest — k probes from one hash evaluation.
+  The build sets all n*k bits in one NumPy pass as
+  ((h1 mod m) + i*(h2 mod m)) mod m: the same residue, kept below k*m
+  so uint64 never wraps. The probe side evaluates the plain formula on
+  Python ints; both read the same bits.
 
-The build here reads each file's key column via pyarrow on the driver —
-right for maintenance jobs at this repo's scale; a production cluster
-builds the same artifact inside the write job (per-partition
-mapInPandas emitting (basename, bits)) with identical on-disk format.
+A file's sidecar is built from its key column read with pyarrow: on the
+driver, or as one executor task per file when the caller passes a
+session and there are several files to build. Only the
+blake2b digest runs per key in Python; everything after it is
+vectorized.
 """
 
 from __future__ import annotations
@@ -69,17 +74,37 @@ def bloom_safe_key(value) -> bool:
             and not isinstance(value, bool))
 
 
-def _hashes(value) -> tuple[int, int]:
-    """(h1, h2) for a key value; type-stable via repr of the canonical
-    python value (int/str/bytes) so build and probe agree."""
+def _digest(value) -> bytes:
+    """16-byte blake2b of a key's type-tagged canonical bytes
+    (int/str/bytes), so build and probe hash the same input."""
     if isinstance(value, (bytes, bytearray)):
         raw = b"b:" + bytes(value)
     elif isinstance(value, int):
         raw = b"i:" + str(value).encode()
     else:
         raw = b"s:" + str(value).encode()
-    d = hashlib.blake2b(raw, digest_size=16).digest()
+    return hashlib.blake2b(raw, digest_size=16).digest()
+
+
+def _hashes(value) -> tuple[int, int]:
+    """(h1, h2) for a key value: the two little-endian halves of one
+    16-byte blake2b digest, h2 forced odd."""
+    d = _digest(value)
     return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little") | 1
+
+
+def _bloom_bits(values: list, m: int, k: int) -> "np.ndarray":
+    """Packed bit array (LSB-first within each byte) with bit
+    (h1 + i*h2) mod m set for every key and i < k. h1, h2 < 2**64 are
+    reduced mod m first, so h1' + i*h2' < k*m fits uint64."""
+    h = np.frombuffer(b"".join(map(_digest, values)), dtype="<u8").reshape(-1, 2)
+    mm = np.uint64(m)
+    h1 = h[:, 0] % mm
+    h2 = (h[:, 1] | np.uint64(1)) % mm
+    pos = (h1[:, None] + np.arange(k, dtype=np.uint64) * h2[:, None]) % mm
+    hit = np.zeros(m, dtype=bool)
+    hit[pos.ravel()] = True
+    return np.packbits(hit, bitorder="little")
 
 
 def _bloom_dir(root: str) -> str:
@@ -151,12 +176,7 @@ def _build_one_bloom(path: str, out: str, column: str) -> int:
     values = [v for v in col.to_pylist() if v is not None]
     n = max(len(values), 1)
     m = int(n * FPP_BITS_PER_KEY) + 8
-    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-    for v in values:
-        h1, h2 = _hashes(v)
-        for i in range(NUM_HASHES):
-            b = (h1 + i * h2) % m
-            bits[b >> 3] |= 1 << (b & 7)
+    bits = _bloom_bits(values, m, NUM_HASHES)
     _write_sidecar(
         out,
         {"column": column, "m": m, "k": NUM_HASHES,

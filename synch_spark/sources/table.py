@@ -1041,7 +1041,7 @@ class ParquetTable:
         restaging (the pooled files are reused). Used by the collapsing
         engines' append-only write strategy
         (/root/reference/synch/writer/collapsing_merge_tree.py:37-58 —
-        never deletes, only appends) and the monitor log.
+        never deletes, only appends) and the dead-letter tables.
 
         ``epoch``: idempotence marker for at-least-once callers
         (streaming micro-batch replays). The marker rides in the commit
@@ -1051,9 +1051,6 @@ class ParquetTable:
         is last-wins per pk; a replayed append doubles signed rows), so
         the guard lives here. Replays happen immediately after a crash,
         well inside the retention window."""
-        import random
-        import time
-
         if epoch is not None and self._epoch_applied(epoch):
             return
         v = self.current_version()
@@ -1076,6 +1073,42 @@ class ParquetTable:
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(staging)
+        self._publish_append(staging, epoch=epoch)
+
+    def append_rows(self, rows: list[tuple], schema) -> None:
+        """Driver-side append of a few rows with no Spark job: pyarrow
+        stages them as one parquet file in ``schema``'s Arrow types
+        (timestamps as UTC microseconds), and append's add-only commit
+        loop publishes it. The first call creates the table, recording
+        ``schema``; a racing creator turns this into a plain append."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        data = pa.Table.from_arrays(
+            [pa.array(col, f.type) for col, f in zip(zip(*rows), arrow)],
+            schema=arrow)
+        v = self.current_version()
+        spec = self.snapshot(v).schema_doc if v >= 0 else None
+        if spec is not None and spec.needs_gen:
+            data = data.append_column(
+                se.GEN_COL, pa.array([spec.gen] * data.num_rows, pa.int64()))
+        staging = self._staging_dir()
+        os.makedirs(staging)
+        pq.write_table(data, os.path.join(
+            staging, f"part-00000-{uuid.uuid4()}-c000.parquet"))
+        self._publish_append(staging, sschema=schema.json())
+
+    def _publish_append(self, staging: str, epoch: str | None = None,
+                        sschema: str | None = None) -> None:
+        """Publish step shared by every append: pool the staged files,
+        then commit an add-only entry against the current head, retried
+        on a lost version race without restaging. ``sschema`` is
+        recorded only when this commit creates version 0."""
+        import random
+        import time
+
         rels = self._promote_files(staging)
         add = {r: {} for r in rels}
         for attempt in range(8):
@@ -1091,8 +1124,9 @@ class ParquetTable:
                 break  # fall through to the staged-file cleanup below
             base = self.current_version()
             snap = self.snapshot(base) if base >= 0 else None
+            created = {"sschema": sschema} if snap is None else {}
             entry = self._make_entry(base + 1, add, [], snap, op="append",
-                                     epoch=epoch)
+                                     epoch=epoch, **created)
             try:
                 self._write_entry(entry)  # no cleanup: rels are reusable
                 return
@@ -1115,7 +1149,7 @@ class ParquetTable:
                 os.remove(self._abs(r))
             except OSError:
                 pass
-        return
+
     def vacuum(self, staging_ttl_s: float = 3600.0) -> int:
         """Remove crash debris: ``.staging-*`` dirs and ``_v/.tmp-*``
         files older than the TTL (a writer that died mid-prepare leaves

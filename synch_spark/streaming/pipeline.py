@@ -35,6 +35,7 @@ from synch_spark.ddl import apply_alter, parse_alter
 from synch_spark.events import (
     RAW_EVENT_WIRE_SCHEMA,
     WIRE_SEQ_COL,
+    dml_predicate,
     filter_dml,
     parse_values,
     split_updates,
@@ -80,20 +81,26 @@ MONITOR_COMPACT_EVERY = 128
 def log_monitor_row(spark, warehouse: str, alias: str, schema: str,
                     table: str, num: int, row_type: int) -> None:
     """BEST-EFFORT monitor row into ``<warehouse>/_synch_log`` (the
-    reference's synch_log table, factory.py:129-151). Producer (type=1)
-    and consumer (type=2) run as SEPARATE Spark applications appending
-    concurrently; ParquetTable.append is commit-race-safe (add-only
-    delta entries retried against the new head), and any residual
-    failure is logged and swallowed — a monitoring row must never kill
-    a produce round or a micro-batch."""
+    reference's synch_log table, factory.py:129-151). The row is written
+    on the driver by ``ParquetTable.append_rows`` — one small pyarrow
+    file published by append's add-only commit loop, no Spark job — with
+    ``created_at`` as the driver's UTC wall clock in microseconds. Every
+    row takes that path, the one that creates the table included.
+    Producer (type=1) and consumer (type=2) run as SEPARATE Spark
+    applications appending concurrently; the add-only commit is
+    race-safe (retried against the new head), and any residual failure
+    is logged and swallowed — a monitoring row must never kill a produce
+    round or a micro-batch. Every MONITOR_COMPACT_EVERY-th version folds
+    the log back into one file with a Spark job."""
     import logging
+    import time
 
     try:
-        row = spark.createDataFrame(
-            [(alias, schema, table, num, row_type)], MONITOR_SCHEMA[:5]
-        ).withColumn("created_at", F.current_timestamp())
         t = ParquetTable(spark, f"{warehouse}/_synch_log")
-        t.append(row)
+        t.append_rows(
+            [(alias, schema, table, int(num), int(row_type),
+              time.time_ns() // 1000)],
+            MONITOR_SCHEMA)
         v = t.current_version()
         if v > 0 and v % MONITOR_COMPACT_EVERY == 0:
             # every append is a one-file commit, so the file list (and
@@ -217,68 +224,57 @@ class CdcPipeline:
         if debezium_types is None:
             debezium_types = self.debezium_types
         raw = batch.persist()
-        batch = raw
         try:
-            # dead-letter capture (reference's --skip-error, continuous.py:120-152,
-            # upgraded from silent skip to an inspectable table): rows that
-            # didn't parse into a routable event land in _synch_dead_letter
-            bad = batch.filter(
-                F.col("action").isNull()
-                | F.col("schema").isNull()
-                | F.col("table").isNull()
-            )
-            if bad.limit(1).count() > 0:
-                # drop the optional wire-seq column: the dead-letter
-                # table's schema must not flip with the source format.
-                # _epoch stamps as STRING always: epoch_id is a long on
-                # the structured-streaming paths but a content-bound
-                # string on the polling loops, and one shared
-                # _synch_dead_letter table must not mix parquet column
-                # types by which consumer dead-lettered first
-                dl = ParquetTable(
-                    self.spark, f"{self.warehouse}/_synch_dead_letter")
-                if dl.exists:
-                    # ADVICE r11: a table created before _epoch became
-                    # string-typed holds LONG parquet columns; appending
-                    # string files into it would mix types in one table
-                    # and break every later read. Migrate ONCE, in
-                    # place, before the first string append.
-                    legacy = next(
-                        (f for f in dl.read().schema.fields
-                         if f.name == "_epoch"
-                         and f.dataType.simpleString() != "string"), None)
-                    if legacy is not None:
-                        dl.overwrite(dl.read().withColumn(
-                            "_epoch", F.col("_epoch").cast("string")))
-                dl.append(
-                    bad.drop(WIRE_SEQ_COL).withColumn(
-                        "_epoch", F.lit(str(epoch_id)))
-                )
-            batch = batch.filter(
-                F.col("action").isNotNull()
-                & F.col("schema").isNotNull()
-                & F.col("table").isNotNull()
-            )
-            # DDL barrier: 'query' events are rare — pull them to the driver
-            # NULL-timestamp DDL floors to 0 like the data rows below:
-            # a None boundary would otherwise leave every segment filter
+            bad_row = (F.col("action").isNull() | F.col("schema").isNull()
+                       | F.col("table").isNull())
+            # NULL-timestamp DDL floors to 0 like the data rows below: a
+            # None boundary would otherwise leave every segment filter
             # open — the whole batch applied once per segment (distinct
             # epoch markers defeat the replay guard: doubled appends)
             # while the DDL itself silently never executes
-            ddls = (
-                batch.filter(F.col("action") == "query")
-                .select("schema", "table", "after",
-                        F.coalesce(F.col("event_unixtime"),
-                                   F.lit(0).cast("long"))
-                        .alias("event_unixtime"))
-                .orderBy("event_unixtime")
+            ts = F.coalesce(F.col("event_unixtime"), F.lit(0).cast("long"))
+            dml = dml_predicate(self.cfg.skip_dmls,
+                                self.cfg.skip_delete_tables,
+                                self.cfg.skip_update_tables)
+            # ONE job summarizes the persisted batch per (schema, table):
+            # dead-letter rows, the DDL rows ('query' events are rare,
+            # pulled to the driver with their arrival position to break
+            # timestamp ties in wire order), and the post-split event
+            # count that filter_dml + split_updates below will produce
+            # (an update splits in two)
+            summary = (
+                raw.withColumn("_pos", F.monotonically_increasing_id())
+                .groupBy("schema", "table")
+                .agg(
+                    F.count(F.when(bad_row, 1)).alias("bad"),
+                    F.collect_list(F.when(
+                        ~bad_row & (F.col("action") == "query"),
+                        F.struct(ts.alias("event_unixtime"), "_pos",
+                                 "after"))).alias("ddl"),
+                    F.sum(F.when(
+                        ~bad_row & (F.col("action") != "query") & dml,
+                        F.when(F.col("action") == "update", 2).otherwise(1),
+                    ).otherwise(0)).alias("num"),
+                )
                 .collect()
             )
+            if any(r["bad"] for r in summary):
+                # dead-letter capture (reference's --skip-error,
+                # continuous.py:120-152, upgraded from silent skip to an
+                # inspectable table): rows that didn't parse into a
+                # routable event land in _synch_dead_letter
+                self._dead_letter_rows(raw.filter(bad_row), epoch_id)
+            ddls = sorted(
+                ({"schema": r["schema"], "table": r["table"],
+                  "after": d["after"], "event_unixtime": d["event_unixtime"],
+                  "_pos": d["_pos"]}
+                 for r in summary for d in r["ddl"]),
+                key=lambda d: (d["event_unixtime"], d["_pos"]))
             # filter raw events FIRST (skip semantics distinguish standalone
             # deletes from update-halves), then split updates
             data = split_updates(
                 filter_dml(
-                    batch.filter(F.col("action") != "query"),
+                    raw.filter(~bad_row & (F.col("action") != "query")),
                     self.cfg.skip_dmls,
                     self.cfg.skip_delete_tables,
                     self.cfg.skip_update_tables,
@@ -289,11 +285,16 @@ class CdcPipeline:
             # nowhere and dead-letter nowhere (silent, timing-dependent
             # loss); floor it to 0 so it lands in the earliest segment,
             # consistent with the no-DDL path that applies it
-            data = data.withColumn(
-                "event_unixtime",
-                F.coalesce(F.col("event_unixtime"), F.lit(0).cast("long")),
-            )
-            boundaries = [r["event_unixtime"] for r in ddls] + [None]
+            data = data.withColumn("event_unixtime", ts)
+            if not ddls:
+                # a group with a NULL schema or table holds only
+                # dead-letter rows, so its num is 0
+                counts = {(r["schema"], r["table"]): r["num"]
+                          for r in summary if r["num"]}
+                self._apply_data_segment(data, debezium_types,
+                                         epoch_id=epoch_id, counts=counts)
+                return
+            boundaries = [d["event_unixtime"] for d in ddls] + [None]
             lo = None
             for i, hi in enumerate(boundaries):
                 seg = data
@@ -309,26 +310,52 @@ class CdcPipeline:
         finally:
             raw.unpersist()
 
+    def _dead_letter_rows(self, bad: DataFrame, epoch_id: "int | str") -> None:
+        """Append unroutable raw rows to ``_synch_dead_letter``. The
+        optional wire-seq column is dropped: the dead-letter table's
+        schema must not flip with the source format. _epoch stamps as
+        STRING always: epoch_id is a long on the structured-streaming
+        paths but a content-bound string on the polling loops, and one
+        shared _synch_dead_letter table must not mix parquet column
+        types by which consumer dead-lettered first."""
+        dl = ParquetTable(self.spark, f"{self.warehouse}/_synch_dead_letter")
+        if dl.exists:
+            # ADVICE r11: a table created before _epoch became
+            # string-typed holds LONG parquet columns; appending string
+            # files into it would mix types in one table and break every
+            # later read. Migrate ONCE, in place, before the first string
+            # append.
+            legacy = next(
+                (f for f in dl.read().schema.fields
+                 if f.name == "_epoch"
+                 and f.dataType.simpleString() != "string"), None)
+            if legacy is not None:
+                dl.overwrite(dl.read().withColumn(
+                    "_epoch", F.col("_epoch").cast("string")))
+        dl.append(bad.drop(WIRE_SEQ_COL).withColumn("_epoch",
+                                                    F.lit(str(epoch_id))))
+
     def _apply_data_segment(self, seg: DataFrame,
                             debezium_types: bool = False,
                             epoch_id: "int | str | None" = None,
-                            segment: int = 0) -> None:
+                            segment: int = 0,
+                            counts: "dict | None" = None) -> None:
         # at-least-once replay guard for the NON-idempotent appliers
         # (collapsing/no-pk appends, mv delta folds): one marker per
         # (stream, micro-batch, DDL segment, table) rides in the commit
         epoch = (f"{self.checkpoint_dir}:{epoch_id}:{segment}"
                  if epoch_id is not None else None)
         # one merge per table present in the segment; table list is tiny.
-        # Piggyback the per-table row counts on the same scan: the
-        # monitor log previously launched one extra count() job per
-        # table per segment over the persisted batch just for the
-        # best-effort _synch_log row
-        counts = {
-            (r["schema"], r["table"]): r["count"]
-            for r in seg.groupBy("schema", "table").count().collect()
-        }
-        present = list(counts)
-        for schema, tbl in present:
+        # ``counts`` ({(schema, table): post-split events}) doubles as
+        # the table list and the _synch_log num: a batch with no DDL gets
+        # it from _apply_batch's summary job; a DDL segment pays one
+        # groupBy count over its own slice of the persisted batch
+        if counts is None:
+            counts = {
+                (r["schema"], r["table"]): r["count"]
+                for r in seg.groupBy("schema", "table").count().collect()
+            }
+        for schema, tbl in counts:
             spec = self.cfg.tables.get(f"{schema}.{tbl}")
             if spec is None:
                 continue  # unconfigured table: intentionally ignored

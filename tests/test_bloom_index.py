@@ -308,16 +308,18 @@ def test_distributed_bloom_build_matches_driver_build(spark, tmp_path):
     n1 = bloom.build_file_blooms(t1, "k")
     n2 = bloom.build_file_blooms(t2, "k", spark=spark)
     assert n1 == n2 == 6
-    import json as _json
 
-    def _load_all(t):
+    def _sidecars(t):
         bdir = os.path.join(t.root, "_bloom")
-        return sorted(
-            _json.load(open(os.path.join(bdir, f)))["m"] for f in os.listdir(bdir)
-        )
+        out = []
+        for f in os.listdir(bdir):
+            with open(os.path.join(bdir, f), "rb") as fh:
+                out.append(fh.read())
+        return sorted(out)
 
-    # same file layout (same repartition of same data) -> same bloom sizes
-    assert _load_all(t1) == _load_all(t2)
+    # same file layout (same repartition of same data) -> the same
+    # sidecar documents, byte for byte (file names differ per table)
+    assert _sidecars(t1) == _sidecars(t2)
     # probe parity on a sample of present/absent keys
     for a, b in zip(_rels(t1), _rels(t2)):
         bl1 = bloom.load_bloom(t1.root, a, "k")
@@ -325,6 +327,71 @@ def test_distributed_bloom_build_matches_driver_build(spark, tmp_path):
         for probe in (0, 999, 1999, 5000, 12345):
             assert bloom.might_contain_any(bl1, [probe]) == \
                    bloom.might_contain_any(bl2, [probe])
+
+
+def _scalar_reference_bits(values, m, k):
+    """The bloom's on-disk bit layout, one probe at a time: bit
+    (h1 + i*h2) mod m, LSB-first within each byte, with h1/h2 the
+    little-endian halves of blake2b-128 over the type-tagged key."""
+    import hashlib
+
+    bits = bytearray((m + 7) // 8)
+    for v in values:
+        if isinstance(v, bytes):
+            raw = b"b:" + v
+        elif isinstance(v, int):
+            raw = b"i:" + str(v).encode()
+        else:
+            raw = b"s:" + v.encode()
+        d = hashlib.blake2b(raw, digest_size=16).digest()
+        h1 = int.from_bytes(d[:8], "little")
+        h2 = int.from_bytes(d[8:], "little") | 1
+        for i in range(k):
+            b = (h1 + i * h2) % m
+            bits[b >> 3] |= 1 << (b & 7)
+    return bytes(bits)
+
+
+#: key columns for the bloom build: (values, pyarrow type name)
+_KEY_COLUMNS = {
+    "int": ([-(2**63), -(2**63) + 1, -1, 0, 1, 2**62, 2**63 - 2, 2**63 - 1]
+            + list(range(-500, 500, 7)), "int64"),
+    "str": ([f"key-{i}" for i in range(300)] + ["", "ü€"], "string"),
+    "bytes": ([bytes([i % 256, i // 256]) for i in range(300)] + [b""],
+              "binary"),
+    "empty": ([], "int64"),
+    "all_null": ([None, None, None], "string"),
+    "single": ([42], "int32"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_KEY_COLUMNS))
+def test_vectorized_bloom_build_matches_scalar_reference(tmp_path, name):
+    """_build_one_bloom's NumPy bit-setting writes exactly the bits of
+    the scalar (h1 + i*h2) % m loop: sidecars stay byte-compatible with
+    blooms built before it, and the probe side reads them unchanged."""
+    import base64
+    import json
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys, typ = _KEY_COLUMNS[name]
+    col = pa.array(keys, getattr(pa, typ)())
+    path = str(tmp_path / f"{name}.parquet")
+    pq.write_table(pa.table({"k": col, "v": pa.array(range(len(col)))}), path)
+    out = str(tmp_path / f"{name}.bloom.json")
+    assert bloom._build_one_bloom(path, out, "k") == 1
+    with open(out) as f:
+        doc = json.load(f)
+    values = [v for v in col.to_pylist() if v is not None]
+    m = max(len(values), 1) * bloom.FPP_BITS_PER_KEY + 8
+    assert (doc["column"], doc["m"], doc["k"]) == ("k", m, bloom.NUM_HASHES)
+    bits = base64.b64decode(doc["bits"])
+    assert bits == _scalar_reference_bits(values, m, bloom.NUM_HASHES)
+    bl = (doc["m"], doc["k"], np.frombuffer(bits, dtype=np.uint8))
+    assert all(bloom.might_contain_any(bl, [v]) for v in values)
 
 
 @pytest.mark.slow

@@ -209,20 +209,165 @@ def test_monitor_log_self_compacts(spark, tmp_path, monkeypatch):
     """The monitor log is append-only (one file per row); without
     periodic self-compaction its file list — and every checkpoint log
     entry naming it — grows forever. At the compaction interval the
-    log folds back to a handful of files with every row intact."""
+    log folds back to a handful of files with every row intact.
+
+    Rows are one-row pyarrow files written on the driver; the fold is a
+    Spark rewrite. Read together, both kinds give back every column of
+    every row, with created_at a TimestampType inside the calls' wall
+    clock. A log whose first row was written by a Spark append (the
+    earlier writer) takes the driver-written rows unchanged."""
+    import time
+
+    from pyspark.sql import functions as F
+
     from synch_spark.sources.table import ParquetTable
     from synch_spark.streaming import pipeline as sp
 
     monkeypatch.setattr(sp, "MONITOR_COMPACT_EVERY", 5)
     wh = str(tmp_path / "wh")
+    t0 = time.time()
     for i in range(7):
-        sp.log_monitor_row(spark, wh, "a1", "db", "t", i, 1)
+        sp.log_monitor_row(spark, wh, "a1", "db", f"t{i % 2}", i, 1 + i % 2)
+    t1 = time.time()
     t = ParquetTable(spark, f"{wh}/_synch_log")
     n_files = len(t.snapshot().files)
     assert n_files <= 4, f"compaction did not fold the log: {n_files} files"
-    rows = t.read().collect()
-    assert len(rows) == 7
-    assert {r["num"] for r in rows} == set(range(7))
+    df = t.read()
+    assert [(f.name, f.dataType) for f in df.schema.fields] == \
+        [(f.name, f.dataType) for f in sp.MONITOR_SCHEMA.fields]
+    rows = sorted(df.collect(), key=lambda r: r["num"])
+    assert [tuple(r)[:5] for r in rows] == [
+        ("a1", "db", f"t{i % 2}", i, 1 + i % 2) for i in range(7)]
+    stamps = [r["created_at"].timestamp() for r in rows]
+    assert all(t0 - 1e-6 <= s <= t1 + 1e-6 for s in stamps), (t0, stamps, t1)
+    assert stamps == sorted(stamps)
+
+    old = str(tmp_path / "old")
+    ParquetTable(spark, f"{old}/_synch_log").append(
+        spark.createDataFrame([("a0", "db", "t", 5, 2)], sp.MONITOR_SCHEMA[:5])
+        .withColumn("created_at", F.current_timestamp()))
+    sp.log_monitor_row(spark, old, "a1", "db", "t", 6, 2)
+    got = ParquetTable(spark, f"{old}/_synch_log").read().orderBy("num").collect()
+    assert [tuple(r)[:5] for r in got] == [("a0", "db", "t", 5, 2),
+                                           ("a1", "db", "t", 6, 2)]
+    assert got[0]["created_at"] <= got[1]["created_at"]
+
+
+def test_consumer_num_counts_post_split_events(spark, tmp_path):
+    """_synch_log.num for a consumer row is the number of events the
+    table received after filter_dml and the update split (an update
+    counts 2), in a batch without DDL and in each segment of a batch
+    with a DDL barrier; a malformed row dead-letters with _epoch as a
+    string."""
+    from collections import Counter
+
+    from synch_spark.events import RAW_EVENT_WIRE_SCHEMA
+
+    cfg = SyncConfig(skip_dmls=("delete",), skip_update_tables=("db.u",))
+    for name in ("t", "u"):
+        cfg.add_table(TableSpec(schema="db", table=name, pk=("id",),
+                                engine=Engine.REPLACING_MERGE_TREE))
+    wh = str(tmp_path / "wh")
+    pipe = CdcPipeline(spark=spark, cfg=cfg, warehouse=wh,
+                       checkpoint_dir=str(tmp_path / "ckpt"),
+                       value_schemas={"db.t": VALUE_SCHEMA, "db.u": VALUE_SCHEMA})
+
+    def ev(table, action, before, after, us):
+        return ("db", table, action,
+                json.dumps(before) if before else None,
+                json.dumps(after) if after else None, us, None)
+
+    # nullable throughout, as a file or Kafka source reads it
+    wire = T.StructType([T.StructField(f.name, f.dataType)
+                         for f in RAW_EVENT_WIRE_SCHEMA.fields])
+
+    def consumer_rows():
+        log = ParquetTable(spark, f"{wh}/_synch_log").read()
+        return Counter((r["table"], r["num"])
+                       for r in log.filter("type = 2").collect())
+
+    one, nine = {"id": 1, "amount": 1.0}, {"id": 1, "amount": 9.0}
+    pipe.apply_batch(spark.createDataFrame([
+        ev("t", "insert", None, one, 100),
+        ev("t", "insert", None, {"id": 2, "amount": 2.0}, 101),
+        ev("t", "update", one, nine, 102),                      # 2 events
+        ev("t", "delete", {"id": 2, "amount": 2.0}, None, 103),  # skipped
+        ev("u", "insert", None, one, 104),
+        ev("u", "update", one, nine, 105),                      # skipped
+        ev("u", "insert", None, {"id": 2, "amount": 2.0}, 106),
+        ("db", "t", None, None, "{}", 107, None),                # malformed
+    ], wire), 1)
+    assert consumer_rows() == Counter({("t", 4): 1, ("u", 2): 1})
+    dead = ParquetTable(spark, f"{wh}/_synch_dead_letter").read()
+    assert dict(dead.dtypes)["_epoch"] == "string"
+    assert [(r["table"], r["_epoch"]) for r in dead.collect()] == [("t", "1")]
+
+    before = consumer_rows()
+    pipe.apply_batch(spark.createDataFrame([
+        ev("t", "insert", None, {"id": 3, "amount": 3.0}, 200),
+        ev("t", "update", {"id": 3, "amount": 3.0}, {"id": 3, "amount": 4.0}, 210),
+        ev("t", "query", None,
+           {"query": "ALTER TABLE db.t ADD COLUMN note varchar(16)"}, 300),
+        ev("t", "update", nine, one, 400),                      # 2 events
+        ev("t", "delete", one, None, 410),                      # skipped
+        ev("u", "update", one, nine, 420),                      # skipped
+        ev("u", "insert", None, {"id": 5, "amount": 5.0}, 430),
+    ], wire), 2)
+    assert consumer_rows() - before == Counter(
+        {("t", 3): 1, ("t", 2): 1, ("u", 1): 1})
+    table = ParquetTable(spark, f"{wh}/db/t")
+    assert "note" in table.read().columns
+
+
+def test_no_ddl_micro_batch_spark_job_count(spark, tmp_path):
+    """Pins the Spark jobs one no-DDL micro-batch into a
+    ReplacingMergeTree table launches: the batch-summary aggregate, the
+    merge's probe and write jobs, the table's schema reads and the bloom
+    build's fan-out over the merge's new files (16 before the monitor
+    row moved to the driver and the summary replaced three per-batch
+    jobs). A change that adds a per-batch job fails here; move the pin
+    only with a measured reason."""
+    import uuid
+
+    from synch_spark.events import RAW_EVENT_WIRE_SCHEMA
+
+    cfg = SyncConfig()
+    cfg.add_table(TableSpec(schema="db", table="t", pk=("id",),
+                            engine=Engine.REPLACING_MERGE_TREE))
+    pipe = CdcPipeline(spark=spark, cfg=cfg, warehouse=str(tmp_path / "wh"),
+                       checkpoint_dir=str(tmp_path / "ckpt"),
+                       value_schemas={"db.t": VALUE_SCHEMA})
+    wire = T.StructType([T.StructField(f.name, f.dataType)
+                         for f in RAW_EVENT_WIRE_SCHEMA.fields])
+
+    def batch(lo, hi, us):
+        rows = []
+        for k in range(lo, hi):
+            img = json.dumps({"id": k % 300, "amount": float(k)})
+            action = "insert" if k < 300 else ("update", "delete")[k % 7 == 0]
+            rows.append(("db", "t", action, img if k >= 300 else None,
+                         None if action == "delete" else img, us + k, None))
+        return spark.createDataFrame(rows, wire)
+
+    pipe.apply_batch(batch(0, 300, 0), 0)
+    pipe.apply_batch(batch(300, 400, 10_000), 1)  # warm-up
+    measured = batch(400, 500, 20_000)
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one no-DDL micro-batch")
+    try:
+        pipe.apply_batch(measured, 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    ids = sorted(tracker.getJobIdsForGroup(group))
+    sites = []
+    for j in ids:
+        info = tracker.getJobInfo(j)
+        stage = info and info.stageIds and tracker.getStageInfo(info.stageIds[0])
+        sites.append(stage.name if stage else "?")
+    assert len(ids) == 11, "\n".join(sites)
 
 
 def test_kafka_source_options_assign_passthrough():
