@@ -29,10 +29,10 @@ Design constraints that make it cheap:
   never removes them.
 - Double hashing (Kirsch-Mitzenmacher): bit_i = (h1 + i*h2) mod m with
   h1/h2 from one blake2b digest — k probes from one hash evaluation.
-  The build sets all n*k bits in one NumPy pass as
-  ((h1 mod m) + i*(h2 mod m)) mod m: the same residue, kept below k*m
-  so uint64 never wraps. The probe side evaluates the plain formula on
-  Python ints; both read the same bits.
+  The build sets the bits in NumPy, a fixed-size chunk of keys per
+  pass, as ((h1 mod m) + i*(h2 mod m)) mod m: the same residue, kept
+  below k*m so uint64 never wraps. The probe side evaluates the plain
+  formula on Python ints; both read the same bits.
 
 A file's sidecar is built from its key column read with pyarrow: on the
 driver, or as one executor task per file when the caller passes a
@@ -52,6 +52,7 @@ import numpy as np
 
 FPP_BITS_PER_KEY = 10  # ~1% false-positive rate at k=7
 NUM_HASHES = 7
+BUILD_CHUNK = 1 << 16  # keys hashed per NumPy pass in the sidecar build
 
 
 def bloom_safe_key(value) -> bool:
@@ -96,14 +97,18 @@ def _hashes(value) -> tuple[int, int]:
 def _bloom_bits(values: list, m: int, k: int) -> "np.ndarray":
     """Packed bit array (LSB-first within each byte) with bit
     (h1 + i*h2) mod m set for every key and i < k. h1, h2 < 2**64 are
-    reduced mod m first, so h1' + i*h2' < k*m fits uint64."""
-    h = np.frombuffer(b"".join(map(_digest, values)), dtype="<u8").reshape(-1, 2)
+    reduced mod m first, so h1' + i*h2' < k*m fits uint64. Keys are
+    hashed BUILD_CHUNK at a time, so the temporaries stay bounded
+    whatever the file's size; only the m-entry hit array grows with it."""
     mm = np.uint64(m)
-    h1 = h[:, 0] % mm
-    h2 = (h[:, 1] | np.uint64(1)) % mm
-    pos = (h1[:, None] + np.arange(k, dtype=np.uint64) * h2[:, None]) % mm
+    probes = np.arange(k, dtype=np.uint64)
     hit = np.zeros(m, dtype=bool)
-    hit[pos.ravel()] = True
+    for lo in range(0, len(values), BUILD_CHUNK):
+        h = np.frombuffer(b"".join(map(_digest, values[lo:lo + BUILD_CHUNK])),
+                          dtype="<u8").reshape(-1, 2)
+        h1 = h[:, 0] % mm
+        h2 = (h[:, 1] | np.uint64(1)) % mm
+        hit[((h1[:, None] + probes * h2[:, None]) % mm).ravel()] = True
     return np.packbits(hit, bitorder="little")
 
 

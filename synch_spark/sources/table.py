@@ -1080,20 +1080,22 @@ class ParquetTable:
         stages them as one parquet file in ``schema``'s Arrow types
         (timestamps as UTC microseconds), and append's add-only commit
         loop publishes it. The first call creates the table, recording
-        ``schema``; a racing creator turns this into a plain append."""
+        ``schema``; a racing creator turns this into a plain append.
+        Refuses a table that carries a schema document: its rows would
+        need the generation column ``append`` stamps."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        v = self.current_version()
+        if v >= 0 and self.snapshot(v).schema_doc is not None:
+            raise ValueError(
+                f"table {self.root}: append_rows cannot write a table "
+                "with a schema document")
         arrow = to_arrow_schema(schema)
         data = pa.Table.from_arrays(
             [pa.array(col, f.type) for col, f in zip(zip(*rows), arrow)],
             schema=arrow)
-        v = self.current_version()
-        spec = self.snapshot(v).schema_doc if v >= 0 else None
-        if spec is not None and spec.needs_gen:
-            data = data.append_column(
-                se.GEN_COL, pa.array([spec.gen] * data.num_rows, pa.int64()))
         staging = self._staging_dir()
         os.makedirs(staging)
         pq.write_table(data, os.path.join(

@@ -238,18 +238,16 @@ class CdcPipeline:
                                 self.cfg.skip_update_tables)
             # ONE job summarizes the persisted batch per (schema, table):
             # dead-letter rows, the DDL rows ('query' events are rare,
-            # pulled to the driver with their arrival position to break
-            # timestamp ties in wire order), and the post-split event
-            # count that filter_dml + split_updates below will produce
-            # (an update splits in two)
+            # pulled to the driver) and the post-split event count that
+            # filter_dml + split_updates below will produce (an update
+            # splits in two)
             summary = (
-                raw.withColumn("_pos", F.monotonically_increasing_id())
-                .groupBy("schema", "table")
+                raw.groupBy("schema", "table")
                 .agg(
                     F.count(F.when(bad_row, 1)).alias("bad"),
                     F.collect_list(F.when(
                         ~bad_row & (F.col("action") == "query"),
-                        F.struct(ts.alias("event_unixtime"), "_pos",
+                        F.struct(ts.alias("event_unixtime"),
                                  "after"))).alias("ddl"),
                     F.sum(F.when(
                         ~bad_row & (F.col("action") != "query") & dml,
@@ -266,10 +264,9 @@ class CdcPipeline:
                 self._dead_letter_rows(raw.filter(bad_row), epoch_id)
             ddls = sorted(
                 ({"schema": r["schema"], "table": r["table"],
-                  "after": d["after"], "event_unixtime": d["event_unixtime"],
-                  "_pos": d["_pos"]}
+                  "after": d["after"], "event_unixtime": d["event_unixtime"]}
                  for r in summary for d in r["ddl"]),
-                key=lambda d: (d["event_unixtime"], d["_pos"]))
+                key=lambda d: d["event_unixtime"])
             # filter raw events FIRST (skip semantics distinguish standalone
             # deletes from update-halves), then split updates
             data = split_updates(

@@ -365,11 +365,15 @@ _KEY_COLUMNS = {
 }
 
 
+@pytest.mark.parametrize("chunk", [7, bloom.BUILD_CHUNK])
 @pytest.mark.parametrize("name", sorted(_KEY_COLUMNS))
-def test_vectorized_bloom_build_matches_scalar_reference(tmp_path, name):
+def test_vectorized_bloom_build_matches_scalar_reference(tmp_path, monkeypatch,
+                                                         name, chunk):
     """_build_one_bloom's NumPy bit-setting writes exactly the bits of
     the scalar (h1 + i*h2) % m loop: sidecars stay byte-compatible with
-    blooms built before it, and the probe side reads them unchanged."""
+    blooms built before it, and the probe side reads them unchanged.
+    A 7-key chunk splits every multi-key column into several hashing
+    passes with a ragged last one."""
     import base64
     import json
 
@@ -377,6 +381,7 @@ def test_vectorized_bloom_build_matches_scalar_reference(tmp_path, name):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    monkeypatch.setattr(bloom, "BUILD_CHUNK", chunk)
     keys, typ = _KEY_COLUMNS[name]
     col = pa.array(keys, getattr(pa, typ)())
     path = str(tmp_path / f"{name}.parquet")

@@ -252,6 +252,25 @@ def test_monitor_log_self_compacts(spark, tmp_path, monkeypatch):
                                            ("a1", "db", "t", 6, 2)]
     assert got[0]["created_at"] <= got[1]["created_at"]
 
+    # a log carrying a schema document would need the generation column
+    # on its rows: the driver-side writer refuses it, and the monitor
+    # row is dropped, not written without the column
+    from synch_spark.ddl import parse_alter
+    from synch_spark.sources.schema_evolution import TableSchema, evolve_schema
+
+    log = ParquetTable(spark, f"{old}/_synch_log")
+    ts, reasons = evolve_schema(
+        TableSchema.from_struct(log.read().schema),
+        parse_alter("alter table db._synch_log "
+                    "add column note varchar(8) default 'x'"))
+    assert reasons == []
+    log.commit_schema(ts)
+    v = log.current_version()
+    with pytest.raises(ValueError, match="schema document"):
+        log.append_rows([("a1", "db", "t", 7, 2, 0)], sp.MONITOR_SCHEMA)
+    sp.log_monitor_row(spark, old, "a1", "db", "t", 7, 2)
+    assert log.current_version() == v
+
 
 def test_consumer_num_counts_post_split_events(spark, tmp_path):
     """_synch_log.num for a consumer row is the number of events the
